@@ -17,6 +17,11 @@ Reference parity:
   (railgun/handlers/WorkflowExecHandler.go:79-186)
 - TTL'd dataframe cache keyed by source mtime
   (railgun/cache/Cache.go:25-79, ServiceExecHandler.go:159-278)
+- one bounded memo of tile responses (encoded body + mimetype), the
+  reference's 5-minute layer cache (cache/Cache.go:79): an entry holds
+  while its layer's source mtime is unchanged, it is younger than
+  ttl_seconds, and no Layer/DataStore update or delete has landed since
+  its compute started
 """
 
 from __future__ import annotations
@@ -70,6 +75,15 @@ _PLURAL = {
 }
 
 
+def _source_mtime(uri: str) -> float:
+    """Modification time of a local source, -1.0 for anything else
+    (missing path, stored_query://, jdbc:)."""
+    try:
+        return os.path.getmtime(uri)
+    except OSError:
+        return -1.0
+
+
 @dataclass
 class _CacheEntry:
     df: DataFrame
@@ -86,25 +100,14 @@ class Catalog:
     )
     _df_cache: dict[str, _CacheEntry] = field(default_factory=dict)
     _service_vars: dict[str, dict] = field(default_factory=dict)
-    # (layer, z, x, y, mask_zoom, threshold) -> (source mtime, loaded_at,
-    # grid): the reference caches layer results with the same 5-min TTL
-    # (cache/Cache.go:79); here the cached unit is the DRIVER-TINY mask
-    # grid (<= 2^8 x 2^8 ints), not the frame, because the groupBy grid is
-    # where the serve wall goes (SERVE_CONC_SF1_r15: ~1.1-1.3 s / request)
-    _grid_cache: dict[tuple, tuple] = field(default_factory=dict)
-    _grid_cache_max: int = 1024
-    _grid_cache_lock: object = field(default_factory=_threading.Lock)
-    # data-tile feature lists (layer_tile_features) — same TTL/mtime/
-    # generation discipline as the mask grids, separate dict with a
-    # smaller cap because a cached unit is up to `limit` GeoJSON
-    # features, not a 2^8 x 2^8 int grid
-    _tile_cache: dict[tuple, tuple] = field(default_factory=dict)
-    _tile_cache_max: int = 256
-    # bumped (under the lock) by every update/delete invalidation: a grid
-    # computed OUTSIDE the lock is inserted only if the generation it
-    # started under is still current, so an invalidation landing
-    # mid-compute discards the stale grid instead of caching it for TTL
-    _grid_cache_gen: int = 0
+    # (layer, route key) -> (source mtime, stored_at, (body, mimetype)),
+    # filled by `cached`. Bounded (oldest insertion evicted); the
+    # generation is bumped by every Layer/DataStore update or delete so
+    # a result computed across an invalidation is never stored
+    _tile_memo: dict[tuple, tuple] = field(default_factory=dict)
+    _tile_memo_max: int = 512
+    _tile_memo_lock: object = field(default_factory=_threading.Lock)
+    _tile_memo_gen: int = 0
 
     # ---- CRUD (GroupHandler/ItemHandler semantics) ----
     def add(self, obj) -> None:
@@ -125,14 +128,8 @@ class Catalog:
             raise NotFound(f"{type(obj).__name__} {obj.name!r}")
         bucket[obj.name] = obj
         if isinstance(obj, (Layer, DataStore)):
-            # a redefined layer expression / datastore uri invalidates any
-            # cached mask grids / tile features computed under the old
-            # definition (both caches are driver-bounded; selective purge
-            # isn't worth it)
-            with self._grid_cache_lock:
-                self._grid_cache_gen += 1
-                self._grid_cache.clear()
-                self._tile_cache.clear()
+            # tiles computed under the old definition must not be served
+            self._clear_tile_memo()
 
     def list(self, kind: type) -> list:
         return sorted(self.objects[_PLURAL[kind]].values(), key=lambda o: o.name)
@@ -145,12 +142,13 @@ class Catalog:
             raise DependencyError(f"{kind.__name__} {name!r} is used by {deps}")
         del self.objects[_PLURAL[kind]][name]
         if kind in (Layer, DataStore):
-            # delete-then-re-add under the same name must not serve grids
-            # computed under the deleted definition (same rule as update)
-            with self._grid_cache_lock:
-                self._grid_cache_gen += 1
-                self._grid_cache.clear()
-                self._tile_cache.clear()
+            # delete-then-re-add under the same name (same rule as update)
+            self._clear_tile_memo()
+
+    def _clear_tile_memo(self) -> None:
+        with self._tile_memo_lock:
+            self._tile_memo_gen += 1
+            self._tile_memo.clear()
 
     def _dependents(self, kind: type, name: str) -> list[str]:
         deps: list[str] = []
@@ -250,7 +248,7 @@ class Catalog:
             from railgun_spark.sources.jdbc import read_jdbc
 
             return read_jdbc(self.spark, uri)
-        mtime = os.path.getmtime(uri) if os.path.exists(uri) else -1.0
+        mtime = _source_mtime(uri)
         now = time.time()
         ent = self._df_cache.get(uri)
         if ent and ent.mtime == mtime and now - ent.loaded_at < self.ttl_seconds:
@@ -275,85 +273,59 @@ class Catalog:
         self, name: str, z: int, x: int, y: int,
         mask_zoom: int, threshold: int,
     ) -> list:
-        """TTL + source-mtime cached mask grid for the tile mask route —
-        the reference's layer-cache behavior (cache/Cache.go:79, 5-min
-        TTL) applied at the grid level: a warm repeat skips the whole
-        groupBy, a datastore rewrite (mtime change), layer/datastore
-        update, or TTL expiry recomputes. stored_query:// and jdbc:
-        sources have no mtime and fall back to TTL-only, exactly the
-        reference's behavior."""
-        layer: Layer = self.get(Layer, name)
-        ds: DataStore = self.get(DataStore, layer.datastore)
-        uri = self._resolve_uri(ds.uri, layer.defaults or {})
-        mtime = os.path.getmtime(uri) if os.path.exists(uri) else -1.0
-        key = (name, z, x, y, mask_zoom, threshold)
-        now = time.time()
-        with self._grid_cache_lock:
-            ent = self._grid_cache.get(key)
-            gen = self._grid_cache_gen
-        if ent and ent[0] == mtime and now - ent[1] < self.ttl_seconds:
-            return ent[2]
-        from railgun_spark.geo.serving import tile_mask_grid
+        """Mask grid of one layer tile (LayerMaskHandler.go), uncached:
+        the mask route memoizes its encoded body through `cached`."""
+        from railgun_spark.geo import serving
 
-        grid = tile_mask_grid(
+        layer: Layer = self.get(Layer, name)
+        return serving.tile_mask_grid(
             self.layer_frame(name), z, x, y,
             mask_zoom=mask_zoom, threshold=threshold,
             layer_extent=tuple(layer.extent) if layer.extent else None,
         )
-        with self._grid_cache_lock:
-            # bounded: drop the oldest insertion (dict order) so a tile
-            # crawler can't grow driver memory without bound. Locked:
-            # the serve path is threaded and two concurrent evictions
-            # could otherwise race iter() against a resize. Generation
-            # check: a layer/datastore update that landed while this
-            # grid was computing bumped the generation, so the grid was
-            # built under a stale definition — return it to this caller
-            # (it read a consistent snapshot) but never cache it.
-            if gen == self._grid_cache_gen:
-                if len(self._grid_cache) >= self._grid_cache_max:
-                    self._grid_cache.pop(next(iter(self._grid_cache)), None)
-                self._grid_cache[key] = (mtime, now, grid)
-        return grid
 
     def layer_tile_features(
         self, name: str, z: int, x: int, y: int,
         limit: int | None = None, user_dfl: str | None = None,
         buffer_tiles: int = 1,
     ) -> list:
-        """TTL + source-mtime cached data-tile features — the reference
-        caches layer DATA with the same 5-min TTL (cache/Cache.go:25-79)
-        that layer_mask_grid applies to mask grids; without it the data
-        route recomputed the bbox filter + collect per request (warm
-        tiles_data p50 0.38-0.43 s at 12-wide sf1, SERVE_CONC_SF1_r16,
-        vs the mask's 31-36 ms). The cached unit is the driver-resident
-        GeoJSON feature list (bounded by `limit`); invalidation is
-        layer_mask_grid's exactly: datastore rewrite (mtime), layer/
-        datastore update or delete (generation counter discards grids
-        AND mid-compute results), TTL expiry."""
-        layer: Layer = self.get(Layer, name)
-        ds: DataStore = self.get(DataStore, layer.datastore)
-        uri = self._resolve_uri(ds.uri, layer.defaults or {})
-        mtime = os.path.getmtime(uri) if os.path.exists(uri) else -1.0
-        key = (name, z, x, y, limit, user_dfl, buffer_tiles)
-        now = time.time()
-        with self._grid_cache_lock:
-            ent = self._tile_cache.get(key)
-            gen = self._grid_cache_gen
-        if ent and ent[0] == mtime and now - ent[1] < self.ttl_seconds:
-            return ent[2]
-        from railgun_spark.geo.serving import tile_data
+        """GeoJSON features of one layer tile (LayerTileHandler.go),
+        uncached: the data route memoizes its body through `cached`."""
+        from railgun_spark.geo import serving
 
-        feats = tile_data(
+        layer: Layer = self.get(Layer, name)
+        return serving.tile_data(
             self.layer_frame(name), z, x, y,
             layer_extent=tuple(layer.extent) if layer.extent else None,
             user_dfl=user_dfl, limit=limit, buffer_tiles=buffer_tiles,
         )
-        with self._grid_cache_lock:
-            if gen == self._grid_cache_gen:
-                if len(self._tile_cache) >= self._tile_cache_max:
-                    self._tile_cache.pop(next(iter(self._tile_cache)), None)
-                self._tile_cache[key] = (mtime, now, feats)
-        return feats
+
+    def cached(self, layer: str, key: tuple, compute):
+        """Memoized `compute()` for a response derived from `layer`,
+        stored under (layer, key). A hit needs the layer's source mtime
+        unchanged and an entry younger than ttl_seconds; stored_query://
+        and jdbc: sources have no mtime and rely on the TTL alone, as in
+        the reference. The lock covers dict operations only, so Spark
+        jobs run unlocked; a result computed while an update or delete
+        landed goes to its caller but is not stored."""
+        lyr: Layer = self.get(Layer, layer)
+        ds: DataStore = self.get(DataStore, lyr.datastore)
+        mtime = _source_mtime(self._resolve_uri(ds.uri, lyr.defaults or {}))
+        key = (layer, key)
+        now = time.time()
+        with self._tile_memo_lock:
+            ent = self._tile_memo.get(key)
+            gen = self._tile_memo_gen
+        if ent and ent[0] == mtime and now - ent[1] < self.ttl_seconds:
+            return ent[2]
+        value = compute()
+        with self._tile_memo_lock:
+            if gen == self._tile_memo_gen:
+                self._tile_memo.pop(key, None)  # a refresh moves to the newest end
+                if len(self._tile_memo) >= self._tile_memo_max:
+                    self._tile_memo.pop(next(iter(self._tile_memo)))
+                self._tile_memo[key] = (mtime, now, value)
+        return value
 
     def exec_service(self, name: str, variables: dict | None = None):
         """cache -> defaults -> request variable merge

@@ -24,9 +24,11 @@ ItemHandler.go:127-136,202-211). Auth activates when create_app is given a
 root_password; without one the server stays open (dev mode).
 
 The server is a driver-side veneer: every request compiles to a DataFrame
-plan executed by the shared SparkSession; the catalog's TTL/mtime caches
-(registry.py) bound repeated reads exactly like the reference's 5-minute
-caches (cache/Cache.go:79)."""
+plan executed by the shared SparkSession. Datastore reads go through the
+catalog's TTL/mtime DataFrame cache, and each tile route builds its
+response body inside `Catalog.cached`, one bounded memo with the
+reference's 5-minute TTL (cache/Cache.go:79): a warm tile is a dict
+lookup, with no Spark job and no re-encode (registry.py)."""
 
 from __future__ import annotations
 
@@ -162,18 +164,6 @@ def create_app(
     if root_password is not None and private_key is None:
         private_key = _auth.generate_keypair()
     public_key = private_key.public_key() if private_key is not None else None
-    # encoded mask bodies keyed by (layer, z, x, y, zoom, threshold, ext),
-    # validated against the catalog grid cache's object identity —
-    # see layer_tile_mask. Lock guards the bounded eviction: the serve
-    # path is threaded and iter()-during-resize would raise.
-    import threading as _threading
-
-    _mask_body_cache: dict[tuple, tuple] = {}
-    _mask_body_lock = _threading.Lock()
-    # serialized data-tile bodies, same identity-validation discipline
-    # against the catalog's cached feature list (layer_tile_data)
-    _data_body_cache: dict[tuple, tuple] = {}
-    _data_body_lock = _threading.Lock()
 
     def _require_auth():
         """Bearer check for mutating routes (GroupHandler.go:100-109).
@@ -310,24 +300,14 @@ def create_app(
         except ValueError:
             return _render({"error": "limit must be an integer"}, ext), 400
         user_dfl = request.args.get("dfl")
-        # features through the catalog's TTL+mtime cache (the reference
-        # caches layer DATA with the same 5-min TTL, cache/Cache.go:
-        # 25-79); the serialized body is memoized per format against the
-        # feature list's IDENTITY, exactly the mask route's discipline —
-        # a warm repeat is a dict lookup, no Spark job and no re-encode
-        feats = catalog.layer_tile_features(
-            name, z, x, y, limit=limit, user_dfl=user_dfl
-        )
-        key = (name, z, x, y, limit, user_dfl, ext)
-        ent = _data_body_cache.get(key)
-        if ent is None or ent[0] is not feats:
+
+        def encode():
+            feats = catalog.layer_tile_features(name, z, x, y, limit=limit, user_dfl=user_dfl)
             resp = _render(feature_collection(feats), ext)
-            ent = (feats, resp.get_data(), resp.mimetype)
-            with _data_body_lock:
-                if len(_data_body_cache) >= 256:
-                    _data_body_cache.pop(next(iter(_data_body_cache)), None)
-                _data_body_cache[key] = ent
-        return Response(ent[1], mimetype=ent[2])
+            return resp.get_data(), resp.mimetype
+
+        body, mime = catalog.cached(name, ("data", z, x, y, limit, user_dfl, ext), encode)
+        return Response(body, mimetype=mime)
 
     @app.route("/layers/<name>/tiles/mask/<int:z>/<int:x>/<int:y>.<ext>")
     def layer_tile_mask(name, z, x, y, ext):
@@ -344,27 +324,16 @@ def create_app(
             threshold = int(request.args.get("threshold", 1))
         except ValueError:
             return Response("zoom and threshold must be integers", status=400)
-        # grid computed through the catalog's TTL+mtime cache
-        # (cache/Cache.go:79 twin); the encoded body is memoized per
-        # format against the grid's IDENTITY — valid exactly as long as
-        # the catalog keeps returning the same cached grid object, so a
-        # warm repeat is a dict lookup (the gif/jpg encoders are
-        # GIL-bound Python and re-encoding per request was the residual
-        # ~120 ms at 12-wide)
-        grid = catalog.layer_mask_grid(
-            name, z, x, y, mask_zoom=zoom, threshold=threshold
-        )
-        key = (name, z, x, y, zoom, threshold, ext)
-        ent = _mask_body_cache.get(key)
-        if ent is None or ent[0] is not grid:
-            body, mime = grid_to_image(grid, ext)
-            # the grid ref rides along purely as the validity token
-            ent = (grid, body, mime)
-            with _mask_body_lock:
-                if len(_mask_body_cache) >= 1024:
-                    _mask_body_cache.pop(next(iter(_mask_body_cache)), None)
-                _mask_body_cache[key] = ent
-        return Response(ent[1], mimetype=ent[2])
+        # the grid is 2^(zoom-z) cells a side, built on the driver
+        if not z <= zoom <= z + 8:
+            return Response(f"zoom must be between {z} and {z + 8}", status=400)
+
+        def encode():
+            grid = catalog.layer_mask_grid(name, z, x, y, mask_zoom=zoom, threshold=threshold)
+            return grid_to_image(grid, ext)
+
+        body, mime = catalog.cached(name, ("mask", z, x, y, zoom, threshold, ext), encode)
+        return Response(body, mimetype=mime)
 
     @app.route("/health.<ext>")
     def health_route(ext):

@@ -195,6 +195,35 @@ def test_catalog_roundtrip(catalog, tmp_path, spark):
     assert loaded.layer_frame("bars").count() == 3
 
 
+def test_load_datastore_cache_mtime_and_ttl(catalog, monkeypatch):
+    """load_datastore's DataFrame cache (ServiceExecHandler.go:159-278):
+    a warm call returns the same DataFrame without reading; a source
+    mtime change or TTL expiry each re-read the source."""
+    import time as _time
+
+    reads = {"n": 0}
+    real = formats.read
+
+    def counting(*a, **kw):
+        reads["n"] += 1
+        return real(*a, **kw)
+
+    monkeypatch.setattr(formats, "read", counting)
+    df = catalog.load_datastore("osm")
+    assert reads["n"] == 1 and df.count() == 5
+    assert catalog.load_datastore("osm") is df and reads["n"] == 1
+
+    path = catalog.get(DataStore, "osm").uri
+    os.utime(path, (os.path.getmtime(path) + 5,) * 2)
+    df2 = catalog.load_datastore("osm")
+    assert reads["n"] == 2 and df2 is not df
+    assert catalog.load_datastore("osm") is df2 and reads["n"] == 2
+
+    catalog.ttl_seconds = 0.01
+    _time.sleep(0.02)
+    assert catalog.load_datastore("osm") is not df2 and reads["n"] == 3
+
+
 def test_stored_query_datastore(catalog, spark):
     spark.range(7).createOrReplaceTempView("t_stored")
     catalog.add_stored_query("seven", "SELECT id FROM t_stored WHERE id >= 2")

@@ -181,171 +181,234 @@ def test_server_swagger(app_client):
     assert set(doc["definitions"]) >= {"DataStore", "Layer", "Service", "Workflow"}
 
 
-def test_mask_grid_cache_warm_and_invalidation(spark, tmp_path, monkeypatch):
-    """The mask route's grid cache (cache/Cache.go:79 twin): a warm
-    repeat skips the groupBy entirely; a datastore rewrite (mtime), a
-    layer/datastore update, or TTL expiry recomputes."""
+def _memo_app(spark, tmp_path, monkeypatch):
+    """A one-layer server for the tile-memo tests, call counters on the
+    functions a tile miss runs (tile_data, tile_mask_grid, grid_to_image),
+    and rewrite(n_rows, fx, fy): replace the datastore with n_rows points
+    at fraction (fx, fy) of tile 10/292/391, moving its mtime forward."""
+    pytest.importorskip("flask")
+    import os
+    import time as _time
+
+    import railgun_spark.geo.serving as serving
+    from railgun_spark.server import create_app
+
+    data = tmp_path / "pts.jsonl"
+    w, s, e, n = tile_bbox(10, 292, 391)
+    stamp = [_time.time()]
+
+    def rewrite(n_rows, fx, fy):
+        rows = [{"id": i, "amenity": "bar", "lon": w + (e - w) * fx, "lat": s + (n - s) * fy}
+                for i in range(n_rows)]
+        data.write_text("\n".join(json.dumps(r) for r in rows))
+        stamp[0] += 10  # distinct even on a coarse-mtime filesystem
+        os.utime(data, (stamp[0], stamp[0]))
+
+    rewrite(4, 0.5, 0.5)
+    cat = Catalog(spark)
+    cat.add(DataStore(name="pts", uri=str(data), format="jsonl"))
+    cat.add(Layer(name="bars", datastore="pts"))
+
+    calls = {"tile_data": 0, "tile_mask_grid": 0, "grid_to_image": 0}
+    real = {name: getattr(serving, name) for name in calls}
+
+    def counting(name):
+        def wrapper(*a, **kw):
+            calls[name] += 1
+            return real[name](*a, **kw)
+
+        return wrapper
+
+    for name in calls:
+        monkeypatch.setattr(serving, name, counting(name))
+    return cat, create_app(cat).test_client(), calls, real, rewrite
+
+
+def test_mask_tile_memo_warm_and_invalidation(spark, tmp_path, monkeypatch):
+    """The mask route's body is memoized in the catalog (cache/Cache.go:79
+    twin): a warm repeat runs no groupBy and no encoder; params and
+    extension are part of the key; a datastore rewrite (mtime), a layer
+    update, or TTL expiry recomputes; the memo is bounded; an
+    invalidation landing mid-compute is not stored."""
     import os
     import time as _time
 
     import railgun_spark.geo.serving as serving
 
-    data = tmp_path / "pts.jsonl"
-    w, s, e, n = tile_bbox(10, 292, 391)
-    rows = [
-        {"id": i, "amenity": "bar",
-         "lon": w + (e - w) * 0.5, "lat": s + (n - s) * 0.5}
-        for i in range(4)
-    ]
-    data.write_text("\n".join(json.dumps(r) for r in rows))
-    cat = Catalog(spark)
-    cat.add(DataStore(name="pts", uri=str(data), format="jsonl"))
-    cat.add(Layer(name="bars", datastore="pts"))
+    cat, client, calls, real, rewrite = _memo_app(spark, tmp_path, monkeypatch)
 
-    calls = {"n": 0}
-    real = serving.tile_mask_grid
+    def get(ext="png", **params):
+        r = client.get(f"/layers/bars/tiles/mask/10/292/391.{ext}",
+                       query_string={"zoom": 12, **params})
+        assert r.status_code == 200
+        return r.data
 
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return real(*a, **kw)
+    def grids():
+        assert calls["tile_mask_grid"] == calls["grid_to_image"]
+        return calls["tile_mask_grid"]
 
-    monkeypatch.setattr(serving, "tile_mask_grid", counting)
+    body = get()
+    assert body.startswith(b"\x89PNG") and grids() == 1
+    # warm repeat: same bytes, neither the grid nor the encoder runs
+    assert get() == body and grids() == 1
+    # different params or extension = different key
+    get(threshold=2)
+    assert grids() == 2
+    get("gif")
+    assert grids() == 3
 
-    g1 = cat.layer_mask_grid("bars", 10, 292, 391, mask_zoom=12, threshold=1)
-    assert calls["n"] == 1 and any(any(r) for r in g1)
-    # warm repeat: served from cache, no recompute, same grid
-    assert cat.layer_mask_grid("bars", 10, 292, 391, 12, 1) is g1
-    assert calls["n"] == 1
-    # different cell/params = different key
-    cat.layer_mask_grid("bars", 10, 292, 391, 12, 2)
-    assert calls["n"] == 2
+    # datastore rewrite: mtime change recomputes, and the bytes follow
+    # the new data (points moved to another mask cell)
+    rewrite(4, 0.1, 0.1)
+    moved = get()
+    assert grids() == 4 and moved != body
+    # a touch without new content recomputes too (mtime is the signal)
+    path = tmp_path / "pts.jsonl"
+    os.utime(path, (os.path.getmtime(path) + 5,) * 2)
+    assert get() == moved and grids() == 5
 
-    # datastore rewrite: mtime change invalidates
-    os.utime(data, (os.path.getmtime(data) + 5,) * 2)
-    cat.layer_mask_grid("bars", 10, 292, 391, 12, 1)
-    assert calls["n"] == 3
-
-    # layer update invalidates (the cached grid was computed under the
-    # old definition)
+    # layer update recomputes (the body was built under the old definition)
     cat.update(Layer(name="bars", datastore="pts"))
-    cat.layer_mask_grid("bars", 10, 292, 391, 12, 1)
-    assert calls["n"] == 4
+    get()
+    assert grids() == 6
 
-    # TTL expiry invalidates
+    # TTL expiry recomputes
     cat.ttl_seconds = 0.01
     _time.sleep(0.02)
-    cat.layer_mask_grid("bars", 10, 292, 391, 12, 1)
-    assert calls["n"] == 5
+    get()
+    assert grids() == 7
 
-    # the cache is bounded: overflow evicts, never grows past the cap
+    # bounded: overflow evicts, the memo never grows past its cap
     cat.ttl_seconds = 300.0
-    cat._grid_cache_max = 4
-    for t in range(10):
-        cat.layer_mask_grid("bars", 10, 292, 391, 12, 10 + t)
-    assert len(cat._grid_cache) <= 4
+    cat._tile_memo_max = 4
+    for t in range(6):
+        get(threshold=10 + t)
+    assert len(cat._tile_memo) == 4
 
-    # an invalidation landing MID-COMPUTE (generation bump between the
-    # cache miss and the insert) must not cache the stale grid: the
-    # caller gets its consistent result, the next request recomputes
-    cat._grid_cache.clear()
-    before = calls["n"]
+    # an invalidation landing between the miss and the insert: the
+    # caller gets its body, the memo keeps nothing, the next request
+    # recomputes under the new generation
+    cat._tile_memo.clear()
+    before = grids()
 
     def bumping(*a, **kw):
-        calls["n"] += 1
-        # simulate a layer update racing the compute
+        calls["tile_mask_grid"] += 1
         cat.update(Layer(name="bars", datastore="pts"))
-        return real(*a, **kw)
+        return real["tile_mask_grid"](*a, **kw)
 
     monkeypatch.setattr(serving, "tile_mask_grid", bumping)
-    cat.layer_mask_grid("bars", 10, 292, 391, 12, 1)
-    assert calls["n"] == before + 1
-    assert len(cat._grid_cache) == 0  # stale grid discarded, not cached
-    monkeypatch.setattr(serving, "tile_mask_grid", counting)
-    cat.layer_mask_grid("bars", 10, 292, 391, 12, 1)
-    assert calls["n"] == before + 2  # recomputed under the new generation
-    assert len(cat._grid_cache) == 1
+    assert get() == moved
+    assert grids() == before + 1 and len(cat._tile_memo) == 0
+    monkeypatch.undo()
+    get()
+    assert len(cat._tile_memo) == 1
 
 
-def test_data_tile_cache_warm_and_invalidation(spark, tmp_path, monkeypatch):
-    """The data-tile route's feature cache (the reference caches layer
-    DATA with the same 5-min TTL, cache/Cache.go:25-79): a warm repeat
-    skips the bbox query entirely; params are part of the key; a
+def test_data_tile_memo_warm_and_invalidation(spark, tmp_path, monkeypatch):
+    """The data route's body is memoized in the catalog (the reference
+    caches layer DATA with the same 5-min TTL, cache/Cache.go:25-79): a
+    warm repeat runs no bbox query; params are part of the key; a
     datastore rewrite (mtime), layer update, or TTL expiry recomputes;
-    an invalidation landing mid-compute is not cached."""
-    import os
+    the memo is bounded; an invalidation landing mid-compute is not
+    stored."""
     import time as _time
 
     import railgun_spark.geo.serving as serving
 
-    data = tmp_path / "pts.jsonl"
-    w, s, e, n = tile_bbox(10, 292, 391)
-    rows = [
-        {"id": i, "amenity": "bar",
-         "lon": w + (e - w) * 0.5, "lat": s + (n - s) * 0.5}
-        for i in range(4)
-    ]
-    data.write_text("\n".join(json.dumps(r) for r in rows))
-    cat = Catalog(spark)
-    cat.add(DataStore(name="pts", uri=str(data), format="jsonl"))
-    cat.add(Layer(name="bars", datastore="pts"))
+    cat, client, calls, real, rewrite = _memo_app(spark, tmp_path, monkeypatch)
 
-    calls = {"n": 0}
-    real = serving.tile_data
+    def get(**params):
+        r = client.get("/layers/bars/tiles/data/10/292/391.json", query_string=params)
+        assert r.status_code == 200
+        return r.data
 
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return real(*a, **kw)
-
-    monkeypatch.setattr(serving, "tile_data", counting)
-
-    f1 = cat.layer_tile_features("bars", 10, 292, 391, limit=-1)
-    assert calls["n"] == 1 and len(f1) == 4
-    # warm repeat: same list object, no recompute
-    assert cat.layer_tile_features("bars", 10, 292, 391, limit=-1) is f1
-    assert calls["n"] == 1
+    body = get()
+    assert json.loads(body)["numberOfFeatures"] == 4 and calls["tile_data"] == 1
+    # warm repeat: same bytes, no query
+    assert get() == body and calls["tile_data"] == 1
     # different params = different key
-    f2 = cat.layer_tile_features("bars", 10, 292, 391, limit=2)
-    assert calls["n"] == 2 and len(f2) == 2
-    cat.layer_tile_features("bars", 10, 292, 391, limit=-1,
-                            user_dfl="filter(@, '@amenity == bar')")
-    assert calls["n"] == 3
+    assert json.loads(get(limit=2))["numberOfFeatures"] == 2
+    assert calls["tile_data"] == 2
+    get(dfl="filter(@, '@amenity == bar')")
+    assert calls["tile_data"] == 3
 
-    # datastore rewrite: mtime change invalidates
-    os.utime(data, (os.path.getmtime(data) + 5,) * 2)
-    cat.layer_tile_features("bars", 10, 292, 391, limit=-1)
-    assert calls["n"] == 4
+    # datastore rewrite: mtime change recomputes and serves the new rows
+    rewrite(7, 0.5, 0.5)
+    fresh = get()
+    assert calls["tile_data"] == 4 and fresh != body
+    assert json.loads(fresh)["numberOfFeatures"] == 7
 
-    # layer update invalidates
+    # layer update recomputes
     cat.update(Layer(name="bars", datastore="pts"))
-    cat.layer_tile_features("bars", 10, 292, 391, limit=-1)
-    assert calls["n"] == 5
+    get()
+    assert calls["tile_data"] == 5
 
-    # TTL expiry invalidates
+    # TTL expiry recomputes
     cat.ttl_seconds = 0.01
     _time.sleep(0.02)
-    cat.layer_tile_features("bars", 10, 292, 391, limit=-1)
-    assert calls["n"] == 6
+    get()
+    assert calls["tile_data"] == 6
 
-    # bounded + mid-compute invalidation discarded (same generation
-    # discipline as the mask grid cache)
+    # bounded
     cat.ttl_seconds = 300.0
-    cat._tile_cache_max = 4
-    for t in range(8):
-        cat.layer_tile_features("bars", 10, 292, 391, limit=10 + t)
-    assert len(cat._tile_cache) <= 4
+    cat._tile_memo_max = 4
+    for t in range(6):
+        get(limit=10 + t)
+    assert len(cat._tile_memo) == 4
 
-    cat._tile_cache.clear()
-    before = calls["n"]
+    # an invalidation landing mid-compute is not stored
+    cat._tile_memo.clear()
+    before = calls["tile_data"]
 
     def bumping(*a, **kw):
-        calls["n"] += 1
+        calls["tile_data"] += 1
         cat.update(Layer(name="bars", datastore="pts"))
-        return real(*a, **kw)
+        return real["tile_data"](*a, **kw)
 
     monkeypatch.setattr(serving, "tile_data", bumping)
-    cat.layer_tile_features("bars", 10, 292, 391, limit=-1)
-    assert calls["n"] == before + 1
-    assert len(cat._tile_cache) == 0
+    assert get() == fresh
+    assert calls["tile_data"] == before + 1 and len(cat._tile_memo) == 0
+
+
+def test_tile_memo_threaded_stress(tmp_path):
+    """Server threads share the memo: lookups, inserts, evictions and
+    update invalidations racing each other never raise, never hand a
+    caller another key's value, and never grow the memo past its cap."""
+    import sys
+    import threading
+
+    data = tmp_path / "d.jsonl"
+    data.write_text("{}")
+    cat = Catalog(spark=None)
+    cat.add(DataStore(name="d", uri=str(data), format="jsonl"))
+    cat.add(Layer(name="l", datastore="d"))
+    cat._tile_memo_max = 8
+    errors = []
+
+    def worker(w):
+        try:
+            for i in range(300):
+                if w == 0 and i % 10 == 0:
+                    cat.update(Layer(name="l", datastore="d"))
+                key = (w * 7 + i) % 24
+                assert cat.cached("l", key, lambda: key * 3) == key * 3
+                assert len(cat._tile_memo) <= cat._tile_memo_max
+        except Exception as e:  # reported by the main thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,)) for w in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(cat._tile_memo) <= 8
 
 
 def test_server_tiles(app_client):
@@ -365,6 +428,13 @@ def test_server_tiles(app_client):
     assert r.mimetype == "image/jpeg"
     r = app_client.get("/layers/bars/tiles/mask/10/292/391.bmp?zoom=12")
     assert r.status_code == 404
+
+    # mask zoom must satisfy z <= zoom <= z + 8 (the grid is 2^(zoom-z)
+    # a side): below z, far above z, and z > 18 with the default zoom
+    for url in ("/layers/bars/tiles/mask/10/292/391.png?zoom=9",
+                "/layers/bars/tiles/mask/10/292/391.png?zoom=19",
+                "/layers/bars/tiles/mask/19/149504/200192.png"):
+        assert app_client.get(url).status_code == 400
 
     # tile far away -> empty collection
     r = app_client.get("/layers/bars/tiles/data/10/0/0.json")
